@@ -1,16 +1,14 @@
 package graft.model
 
-import java.time.LocalDateTime
-
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.QueryPack
 import graft.io.Tables.t
 import graft.util.Det._
 
 /** Typed record definitions — the Spark-native `models/` layer of the
-  * reference taxonomy (SURVEY.md §0.2). Case classes mirror the parquet
-  * footer schemas exactly (timestamp_ntz → LocalDateTime), so
+  * reference taxonomy (SURVEY.md §0.2). Case classes mirror the column
+  * types of the fixture schemas declared in [[graft.io.Tables]], so
   * `df.as[T]` is a zero-copy schema assertion: it fails fast on drift
   * and gives compile-time column safety downstream.
   *
@@ -21,31 +19,17 @@ import graft.util.Det._
   * `typed_filter_agg` below does: Column predicates reach the scan,
   * the typed map runs after).
   */
-case class Nation(n_nationkey: Int, n_name: String, n_regionkey: Int,
-                  n_comment: String)
-
-case class Lineitem(l_orderkey: Long, l_partkey: Long, l_suppkey: Long,
-                    l_linenumber: Int, l_quantity: Double,
-                    l_extendedprice: Double, l_discount: Double,
-                    l_tax: Double, l_returnflag: String,
-                    l_linestatus: String, l_shipdate: LocalDateTime)
-
 case class RevenueLine(flag: String, status: String, cents: Long)
 
 /** Narrow typed view for the revenue pipeline: only the columns the
   * typed lambda reads. The typed map is opaque to Catalyst, so column
   * pruning must happen BEFORE `.as[T]` — deserializing the full
-  * 11-column Lineitem (timestamps included) for a 4-field computation
+  * 11-column lineitem row (timestamps included) for a 4-field computation
   * costs ~10× the math itself. */
 case class PricedLine(l_returnflag: String, l_linestatus: String,
                       l_extendedprice: Double, l_discount: Double)
 
 object Schemas extends QueryPack {
-
-  def lineitems(s: SparkSession, dir: String): Dataset[Lineitem] = {
-    import s.implicits._
-    t(s, dir, "lineitem").as[Lineitem]
-  }
 
   /** Typed pipeline: Column predicate first (reaches the scan), then a
     * Column projection down to the 4 columns the lambda reads (the

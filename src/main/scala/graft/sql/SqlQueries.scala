@@ -22,18 +22,23 @@ import graft.util.Det._
   */
 object SqlQueries extends QueryPack {
 
-  private def views(s: SparkSession, dir: String): Unit =
-    Tables.names.foreach { n =>
-      Tables.t(s, dir, n).createOrReplaceTempView(n)
-    }
+  /** Registers the fixture tables `text` names as temp views, then runs
+    * it. A table is registered when its name appears as a whole word
+    * anywhere in the text: a query can only reference a table by
+    * spelling its name, and a spurious match (a column alias or
+    * comment) just registers one view too many. */
+  private def sql(s: SparkSession, dir: String, text: String): DataFrame = {
+    Tables.names.filter(n => s"(?i)\\b$n\\b".r.findFirstIn(text).isDefined)
+      .foreach(n => Tables.t(s, dir, n).createOrReplaceTempView(n))
+    s.sql(text)
+  }
 
   /** TPC-H Q4 shape: order-priority histogram of orders having at
     * least one returned lineitem (fixture lineitem carries no
     * commit/receipt dates, so the Q4 lateness predicate becomes a
     * returnflag test — same EXISTS -> semi-join shape). */
-  def sqlExists(s: SparkSession, dir: String): DataFrame = {
-    views(s, dir)
-    s.sql(
+  def sqlExists(s: SparkSession, dir: String): DataFrame =
+    sql(s, dir,
       """SELECT o_orderpriority, count(*) AS n_orders
         |FROM orders
         |WHERE o_orderdate >= TIMESTAMP '1996-01-01'
@@ -43,26 +48,22 @@ object SqlQueries extends QueryPack {
         |                AND l_returnflag = 'R')
         |GROUP BY o_orderpriority
         |ORDER BY o_orderpriority""".stripMargin)
-  }
 
   /** Customers above their nation's average balance (correlated scalar
     * subquery; Catalyst decorrelates to agg + join). The average is
     * computed cents-exact (Det discipline) so the > comparison cannot
     * flip between engines on float summation order. */
-  def sqlCorrScalar(s: SparkSession, dir: String): DataFrame = {
-    views(s, dir)
-    s.sql(
+  def sqlCorrScalar(s: SparkSession, dir: String): DataFrame =
+    sql(s, dir,
       s"""SELECT c_custkey, c_nationkey, round(c_acctbal, 2) AS bal
         |FROM customer c
         |WHERE c_acctbal > (SELECT CAST(sum(CAST(round(c_acctbal*100) AS BIGINT)) AS DOUBLE)/100/count(*)
         |                   FROM customer WHERE c_nationkey = c.c_nationkey)
         |ORDER BY c_custkey""".stripMargin)
-  }
 
   /** CTE + SQL window: each nation's top-3 customers by 1996 spend. */
-  def sqlCteWindow(s: SparkSession, dir: String): DataFrame = {
-    views(s, dir)
-    s.sql(
+  def sqlCteWindow(s: SparkSession, dir: String): DataFrame =
+    sql(s, dir,
       s"""WITH spend AS (
         |  SELECT c_custkey, c_nationkey,
         |    ${sqlSumMoney("o_totalprice")} AS total
@@ -75,7 +76,6 @@ object SqlQueries extends QueryPack {
         |  FROM spend)
         |WHERE rk <= 3
         |ORDER BY c_nationkey, rk""".stripMargin)
-  }
 
   /** TPC-H Q3 shape (shipping-priority top-N): 3-way join, grouped
     * cents-exact revenue, deterministic top-10 (revenue ties broken by
@@ -95,10 +95,8 @@ object SqlQueries extends QueryPack {
       |ORDER BY revenue DESC, o_orderdate, l_orderkey
       |LIMIT 10""".stripMargin
 
-  def sqlTpchQ3(s: SparkSession, dir: String): DataFrame = {
-    views(s, dir)
-    s.sql(q3Sql)
-  }
+  def sqlTpchQ3(s: SparkSession, dir: String): DataFrame =
+    sql(s, dir, q3Sql)
 
   /** TPC-H Q18 shape (large-volume orders): IN over a grouped HAVING
     * subquery (RewritePredicateSubquery → left-semi on the aggregate).
@@ -115,10 +113,8 @@ object SqlQueries extends QueryPack {
       |GROUP BY c_custkey, o_orderkey
       |ORDER BY c_custkey, o_orderkey""".stripMargin
 
-  def sqlInHaving(s: SparkSession, dir: String): DataFrame = {
-    views(s, dir)
-    s.sql(q18Sql)
-  }
+  def sqlInHaving(s: SparkSession, dir: String): DataFrame =
+    sql(s, dir, q18Sql)
 
   /** TPC-H Q5 shape (local-supplier volume): 6-table star join with
     * the customer-and-supplier-same-nation constraint, grouped
@@ -141,10 +137,8 @@ object SqlQueries extends QueryPack {
       |GROUP BY n_name
       |ORDER BY revenue DESC, n_name""".stripMargin
 
-  def sqlTpchQ5(s: SparkSession, dir: String): DataFrame = {
-    views(s, dir)
-    s.sql(q5Sql)
-  }
+  def sqlTpchQ5(s: SparkSession, dir: String): DataFrame =
+    sql(s, dir, q5Sql)
 
   /** TPC-H Q10 shape (returned-item reporting): revenue lost to
     * returns per customer over one quarter, top-20. Deterministic
@@ -165,10 +159,8 @@ object SqlQueries extends QueryPack {
       |ORDER BY revenue DESC, c_custkey
       |LIMIT 20""".stripMargin
 
-  def sqlTpchQ10(s: SparkSession, dir: String): DataFrame = {
-    views(s, dir)
-    s.sql(q10Sql)
-  }
+  def sqlTpchQ10(s: SparkSession, dir: String): DataFrame =
+    sql(s, dir, q10Sql)
 
   /** TPC-H Q7 shape (volume shipping): bidirectional nation-pair
     * revenue by ship year — the double-role dimension pattern (nation
@@ -195,10 +187,8 @@ object SqlQueries extends QueryPack {
       |GROUP BY supp_nation, cust_nation, l_year
       |ORDER BY supp_nation, cust_nation, l_year""".stripMargin
 
-  def sqlTpchQ7(s: SparkSession, dir: String): DataFrame = {
-    views(s, dir)
-    s.sql(q7Sql)
-  }
+  def sqlTpchQ7(s: SparkSession, dir: String): DataFrame =
+    sql(s, dir, q7Sql)
 
   /** TPC-H Q8 shape (market share): one nation's share of regional
     * revenue per year — the conditional-aggregate ratio pattern. Both
@@ -225,10 +215,8 @@ object SqlQueries extends QueryPack {
       |    AND o_orderdate < TIMESTAMP '1997-01-01') all_nations
       |GROUP BY o_year ORDER BY o_year""".stripMargin
 
-  def sqlTpchQ8(s: SparkSession, dir: String): DataFrame = {
-    views(s, dir)
-    s.sql(q8Sql)
-  }
+  def sqlTpchQ8(s: SparkSession, dir: String): DataFrame =
+    sql(s, dir, q8Sql)
 
   /** TPC-H Q19 shape (discounted revenue over bracketed disjunctions):
     * an OR of three (brand, size-range, quantity-range) conjunct
@@ -248,10 +236,8 @@ object SqlQueries extends QueryPack {
       |   OR (p_brand = 'Brand#3' AND p_size BETWEEN 1 AND 35
       |        AND l_quantity BETWEEN 20 AND 30)""".stripMargin
 
-  def sqlTpchQ19(s: SparkSession, dir: String): DataFrame = {
-    views(s, dir)
-    s.sql(q19Sql)
-  }
+  def sqlTpchQ19(s: SparkSession, dir: String): DataFrame =
+    sql(s, dir, q19Sql)
 
   /** TPC-H Q1 (pricing summary report): the canonical full-scan
     * aggregate — one wide pass over lineitem, 4 money sums + 3 means +
@@ -276,10 +262,8 @@ object SqlQueries extends QueryPack {
       |GROUP BY l_returnflag, l_linestatus
       |ORDER BY l_returnflag, l_linestatus""".stripMargin
 
-  def sqlTpchQ1(s: SparkSession, dir: String): DataFrame = {
-    views(s, dir)
-    s.sql(q1Sql)
-  }
+  def sqlTpchQ1(s: SparkSession, dir: String): DataFrame =
+    sql(s, dir, q1Sql)
 
   /** TPC-H Q6 (forecasting revenue change): scan + 3 selective
     * predicates + scalar aggregate, no join, no group — the query
@@ -296,10 +280,8 @@ object SqlQueries extends QueryPack {
       |  AND l_discount BETWEEN 0.05 AND 0.07
       |  AND l_quantity < 24.0""".stripMargin
 
-  def sqlTpchQ6(s: SparkSession, dir: String): DataFrame = {
-    views(s, dir)
-    s.sql(q6Sql)
-  }
+  def sqlTpchQ6(s: SparkSession, dir: String): DataFrame =
+    sql(s, dir, q6Sql)
 
   /** TPC-H Q14 (promotion effect): conditional-aggregate ratio over a
     * one-month fact slice joined to part — same integer-cents ratio
@@ -315,10 +297,8 @@ object SqlQueries extends QueryPack {
       |  WHERE l_shipdate >= TIMESTAMP '1996-09-01'
       |    AND l_shipdate < TIMESTAMP '1996-10-01') promo""".stripMargin
 
-  def sqlTpchQ14(s: SparkSession, dir: String): DataFrame = {
-    views(s, dir)
-    s.sql(q14Sql)
-  }
+  def sqlTpchQ14(s: SparkSession, dir: String): DataFrame =
+    sql(s, dir, q14Sql)
 
   /** TPC-H Q15 (top supplier): a CTE referenced twice — once as the
     * join input, once inside an uncorrelated scalar-subquery max. The
@@ -341,10 +321,8 @@ object SqlQueries extends QueryPack {
       |WHERE total_cents = (SELECT max(total_cents) FROM revenue)
       |ORDER BY s_suppkey""".stripMargin
 
-  def sqlTpchQ15(s: SparkSession, dir: String): DataFrame = {
-    views(s, dir)
-    s.sql(q15Sql)
-  }
+  def sqlTpchQ15(s: SparkSession, dir: String): DataFrame =
+    sql(s, dir, q15Sql)
 
   /** TPC-H Q17 (small-quantity-order revenue): correlated AVG subquery
     * against the same fact table — the decorrelation stress test
@@ -363,10 +341,8 @@ object SqlQueries extends QueryPack {
       |  AND l_quantity < (SELECT 0.2 * avg(l_quantity) FROM lineitem l2
       |                    WHERE l2.l_partkey = p_partkey)""".stripMargin
 
-  def sqlTpchQ17(s: SparkSession, dir: String): DataFrame = {
-    views(s, dir)
-    s.sql(q17Sql)
-  }
+  def sqlTpchQ17(s: SparkSession, dir: String): DataFrame =
+    sql(s, dir, q17Sql)
 
   /** TPC-H Q22 (global sales opportunity): uncorrelated scalar
     * subquery (cents-exact positive-balance mean) + NOT EXISTS
@@ -384,10 +360,8 @@ object SqlQueries extends QueryPack {
       |GROUP BY c_nationkey
       |ORDER BY c_nationkey""".stripMargin
 
-  def sqlTpchQ22(s: SparkSession, dir: String): DataFrame = {
-    views(s, dir)
-    s.sql(q22Sql)
-  }
+  def sqlTpchQ22(s: SparkSession, dir: String): DataFrame =
+    sql(s, dir, q22Sql)
 
   /** TPC-H Q2 shape (minimum-cost supplier): correlated scalar-min
     * subquery whose inner query is itself a 4-table join — the
@@ -414,10 +388,8 @@ object SqlQueries extends QueryPack {
       |ORDER BY s_acctbal DESC, n_name, s_name, p_partkey
       |LIMIT 100""".stripMargin
 
-  def sqlTpchQ2(s: SparkSession, dir: String): DataFrame = {
-    views(s, dir)
-    s.sql(q2Sql)
-  }
+  def sqlTpchQ2(s: SparkSession, dir: String): DataFrame =
+    sql(s, dir, q2Sql)
 
   /** TPC-H Q9 shape (product-type profit): 5-table join filtered by a
     * substring match on part name, profit grouped by (nation, year).
@@ -438,10 +410,8 @@ object SqlQueries extends QueryPack {
       |GROUP BY n_name, year(o_orderdate)
       |ORDER BY nation, o_year DESC""".stripMargin
 
-  def sqlTpchQ9(s: SparkSession, dir: String): DataFrame = {
-    views(s, dir)
-    s.sql(q9Sql)
-  }
+  def sqlTpchQ9(s: SparkSession, dir: String): DataFrame =
+    sql(s, dir, q9Sql)
 
   /** TPC-H Q11 shape (important stock): grouped value per part with a
     * HAVING threshold that is a FRACTION of the same aggregate over
@@ -462,10 +432,8 @@ object SqlQueries extends QueryPack {
       |FROM val WHERE cents * 1000 > (SELECT sum(cents) FROM val)
       |ORDER BY value DESC, ps_partkey""".stripMargin
 
-  def sqlTpchQ11(s: SparkSession, dir: String): DataFrame = {
-    views(s, dir)
-    s.sql(q11Sql)
-  }
+  def sqlTpchQ11(s: SparkSession, dir: String): DataFrame =
+    sql(s, dir, q11Sql)
 
   /** TPC-H Q12 shape (shipping-mode priority): conditional counts via
     * the ANSI FILTER clause, keyed on the fact attribute (linestatus
@@ -483,10 +451,8 @@ object SqlQueries extends QueryPack {
       |GROUP BY l_linestatus
       |ORDER BY l_linestatus""".stripMargin
 
-  def sqlTpchQ12(s: SparkSession, dir: String): DataFrame = {
-    views(s, dir)
-    s.sql(q12Sql)
-  }
+  def sqlTpchQ12(s: SparkSession, dir: String): DataFrame =
+    sql(s, dir, q12Sql)
 
   /** TPC-H Q13 shape (customer order distribution): LEFT OUTER join
     * with an extra predicate INSIDE the join condition (not the WHERE
@@ -502,10 +468,8 @@ object SqlQueries extends QueryPack {
       |GROUP BY c_count
       |ORDER BY custdist DESC, c_count DESC""".stripMargin
 
-  def sqlTpchQ13(s: SparkSession, dir: String): DataFrame = {
-    views(s, dir)
-    s.sql(q13Sql)
-  }
+  def sqlTpchQ13(s: SparkSession, dir: String): DataFrame =
+    sql(s, dir, q13Sql)
 
   /** TPC-H Q16 shape (parts/supplier relationship): COUNT(DISTINCT)
     * over a derived part-supplier bridge (DISTINCT pairs from
@@ -523,10 +487,8 @@ object SqlQueries extends QueryPack {
       |GROUP BY p_brand, p_type, p_size
       |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""".stripMargin
 
-  def sqlTpchQ16(s: SparkSession, dir: String): DataFrame = {
-    views(s, dir)
-    s.sql(q16Sql)
-  }
+  def sqlTpchQ16(s: SparkSession, dir: String): DataFrame =
+    sql(s, dir, q16Sql)
 
   /** TPC-H Q20 shape (potential part promotion): nested IN chains —
     * suppliers IN (grouped-HAVING over lineitems whose partkey is IN
@@ -546,10 +508,8 @@ object SqlQueries extends QueryPack {
       |    HAVING sum(l_quantity) > 30.0)
       |ORDER BY s_name""".stripMargin
 
-  def sqlTpchQ20(s: SparkSession, dir: String): DataFrame = {
-    views(s, dir)
-    s.sql(q20Sql)
-  }
+  def sqlTpchQ20(s: SparkSession, dir: String): DataFrame =
+    sql(s, dir, q20Sql)
 
   /** TPC-H Q21 shape (suppliers who kept orders waiting): EXISTS and
     * NOT EXISTS both correlated to the SAME outer fact row — the
@@ -575,10 +535,8 @@ object SqlQueries extends QueryPack {
       |ORDER BY numwait DESC, s_name
       |LIMIT 100""".stripMargin
 
-  def sqlTpchQ21(s: SparkSession, dir: String): DataFrame = {
-    views(s, dir)
-    s.sql(q21Sql)
-  }
+  def sqlTpchQ21(s: SparkSession, dir: String): DataFrame =
+    sql(s, dir, q21Sql)
 
   /** Recursive CTE (Spark 4.x): a 48-month calendar spine generated
     * by bounded UNION ALL recursion, LEFT JOINed to monthly revenue —
@@ -608,10 +566,8 @@ object SqlQueries extends QueryPack {
       |FROM spine s LEFT JOIN rev r ON s.ym = r.ym
       |ORDER BY s.ym""".stripMargin
 
-  def sqlRecursive(s: SparkSession, dir: String): DataFrame = {
-    views(s, dir)
-    s.sql(recursiveSql)
-  }
+  def sqlRecursive(s: SparkSession, dir: String): DataFrame =
+    sql(s, dir, recursiveSql)
 
   /** Correlated LATERAL subquery — "top-2 orders per customer" as the
     * SQL-standard lateral derived table: the one subquery shape the
@@ -622,10 +578,8 @@ object SqlQueries extends QueryPack {
     * surface this query pins. Selection carries a total order
     * (o_totalprice DESC, o_orderkey), so the kept 2 rows are
     * engine-identical under ties. */
-  def sqlLateral(s: SparkSession, dir: String): DataFrame = {
-    views(s, dir)
-    s.sql(lateralSql)
-  }
+  def sqlLateral(s: SparkSession, dir: String): DataFrame =
+    sql(s, dir, lateralSql)
 
   private val lateralSql =
     """SELECT c.c_custkey, o.o_orderkey, o.tp
@@ -643,13 +597,11 @@ object SqlQueries extends QueryPack {
     * aggregate never ran), which the oracle mirrors with
     * nullif(count, 0) — the classic pivot-vs-CASE discrepancy pinned
     * by the differential. */
-  def sqlPivot(s: SparkSession, dir: String): DataFrame = {
-    views(s, dir)
-    s.sql(
+  def sqlPivot(s: SparkSession, dir: String): DataFrame =
+    sql(s, dir,
       """SELECT * FROM (SELECT o_orderpriority, o_orderstatus FROM orders)
         |PIVOT (count(*) FOR o_orderstatus IN ('F' AS f, 'O' AS o, 'P' AS p))
         |ORDER BY o_orderpriority""".stripMargin)
-  }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "sql_pivot" -> (sqlPivot _),

@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   StatefulProcessor, TimeMode, TimerValues, ValueState}
 import org.apache.spark.sql.types._
 import graft.QueryPack
+import graft.io.Tables
 
 // Encoder targets must be top-level classes: nesting them inside the
 // object makes generated code resolve `Streams$UserState` members
@@ -102,25 +103,14 @@ class CountWithTtlProcessor(ttlMs: Long)
   */
 object Streams extends QueryPack {
 
-  private def eventsSchema(tsType: org.apache.spark.sql.types.DataType) =
-    StructType(Seq(
-      StructField("event_id", LongType),
-      StructField("ts", tsType),
-      StructField("user_id", LongType),
-      StructField("event_type", StringType),
-      StructField("value", DoubleType),
-      StructField("props", StringType)))
-
   private def eventStream(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // the fixture's ts flavor varies by generation (raw-nanos LONG vs
-    // native TIMESTAMP(MICROS) — see graft.io.Tables.events); a file
-    // stream needs an explicit schema, so probe the footer type with a
-    // metadata-only batch read and declare the matching stream schema.
-    val tsType = s.read.parquet(s"$dir/events.parquet").schema("ts").dataType
+    // native TIMESTAMP(MICROS)); a file stream needs an explicit
+    // schema, so declare the one matching the probed footer type.
+    val tsType = Tables.eventsTsType(s, dir)
     // file-stream source needs a directory or glob basePath; the
     // single-char glob class makes it treat $dir as the base dir.
-    val raw = s.readStream.schema(eventsSchema(tsType))
+    val raw = s.readStream.schema(Tables.eventsSchema(tsType))
       .parquet(s"$dir/events.parque[t]")
     // both flavors normalize to the session-UTC TimestampType the
     // streaming windows have always run on (micro precision)
@@ -203,7 +193,7 @@ object Streams extends QueryPack {
                                plantDupes: Boolean = false): String =
     stagedOnce(prefix, dir) { stage =>
       import s.implicits._
-      val ev = graft.io.Tables.events(s, dir)
+      val ev = Tables.events(s, dir)
         .withColumn("us", unix_micros(col("ts").cast("timestamp")))
         .select($"event_id", $"us", $"user_id", $"event_type", $"value")
       val w = org.apache.spark.sql.expressions.Window
@@ -694,13 +684,7 @@ object Streams extends QueryPack {
   def streamDedupNear(s: SparkSession, dir: String): DataFrame =
     graft.config.Sessions.withStreamStatePartitions(s) {
       import s.implicits._
-      val docSchema = StructType(Seq(
-        StructField("doc_id", LongType),
-        StructField("text", StringType),
-        StructField("lang", StringType),
-        StructField("source", StringType),
-        StructField("n_chars", LongType)))
-      val docs = s.readStream.schema(docSchema)
+      val docs = s.readStream.schema(Tables.schema("documents"))
         .parquet(s"$dir/documents.parque[t]")
       val verdicts = nearDedupBandVerdicts(docs)
       drain(verdicts.toDF(), "graft_stream_dedup_near", OutputMode.Append())
@@ -730,14 +714,8 @@ object Streams extends QueryPack {
   def streamDedupNearOoo(s: SparkSession, dir: String): DataFrame =
     graft.config.Sessions.withStreamStatePartitions(s) {
       import s.implicits._
-      val docSchema = StructType(Seq(
-        StructField("doc_id", LongType),
-        StructField("text", StringType),
-        StructField("lang", StringType),
-        StructField("source", StringType),
-        StructField("n_chars", LongType)))
       val stage = stagedOnce("graft_sdn_ooo", dir) { stage =>
-        val docs = s.read.schema(docSchema).parquet(s"$dir/documents.parquet")
+        val docs = Tables.t(s, dir, "documents")
           .select($"doc_id", $"text", $"lang", $"source", $"n_chars")
         val sentinel = Seq((Long.MaxValue, "sentinel", "en", "src0", 0L))
           .toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -757,7 +735,7 @@ object Streams extends QueryPack {
         }
       }
       val baseUs = 1704067200000000L // 2024-01-01T00:00Z, fixture-free
-      val stream = s.readStream.schema(docSchema)
+      val stream = s.readStream.schema(Tables.schema("documents"))
         .option("maxFilesPerTrigger", 1).parquet(s"$stage/f*.parquet")
         .withColumn("ts",
           when($"doc_id" === Long.MaxValue,
@@ -796,14 +774,8 @@ object Streams extends QueryPack {
   def streamHotTokens(s: SparkSession, dir: String): DataFrame =
     graft.config.Sessions.withStreamStatePartitions(s) {
       import s.implicits._
-      val docSchema = StructType(Seq(
-        StructField("doc_id", LongType),
-        StructField("text", StringType),
-        StructField("lang", StringType),
-        StructField("source", StringType),
-        StructField("n_chars", LongType)))
       val stage = stagedOnce("graft_stream_hot", dir) { stage =>
-        val docs = s.read.schema(docSchema).parquet(s"$dir/documents.parquet")
+        val docs = Tables.t(s, dir, "documents")
         (0 until 3).foreach { i =>
           val tmp = s"$stage/w$i"
           docs.where(pmod(xxhash64($"doc_id"), lit(3)) === i)
@@ -816,7 +788,7 @@ object Streams extends QueryPack {
           ()
         }
       }
-      val counts = s.readStream.schema(docSchema)
+      val counts = s.readStream.schema(Tables.schema("documents"))
         .option("maxFilesPerTrigger", 1).parquet(s"$stage/f*.parquet")
         .select(explode(split($"text", " ")).as("tok"))
         .groupBy($"tok").agg(count(lit(1)).as("n"))
@@ -875,7 +847,7 @@ object Streams extends QueryPack {
   def streamEnrich(s: SparkSession, dir: String): DataFrame =
     graft.config.Sessions.withStreamStatePartitions(s) {
       import s.implicits._
-      val dim = graft.io.Tables.t(s, dir, "customer")
+      val dim = Tables.t(s, dir, "customer")
         .select($"c_custkey".as("user_id"), $"c_mktsegment".as("segment"))
       val agg = eventStream(s, dir)
         .where($"event_type" === "purchase")

@@ -384,7 +384,8 @@ class PlanSpec extends AnyFunSuite {
     // the Generate doing that expansion, and the only joins left are
     // the TWO degree joins onto the pair aggregate (a regression back
     // to the wedge self-join shape adds a third join and its
-    // exchanges); all joins equi, top-20 without a global sort
+    // exchanges, and losing a degree join drops below two); all joins
+    // equi, top-20 without a global sort
     val p = plan("graph_jaccard")
     assert(p.contains("Generate"), p.take(1200))
     // formatted mode prints each node twice (tree + detail); count
@@ -392,7 +393,7 @@ class PlanSpec extends AnyFunSuite {
     val nJoins =
       "\\(\\d+\\) (SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin)".r
         .findAllIn(p).size
-    assert(nJoins <= 2, s"expected <= 2 joins (degree attach), got $nJoins")
+    assert(nJoins == 2, s"expected exactly 2 joins (degree attach), got $nJoins")
     assert(p.contains("TakeOrderedAndProject"), p.take(800))
     assert(!p.contains("CartesianProduct") &&
            !p.contains("BroadcastNestedLoopJoin"), p.take(1200))
